@@ -115,21 +115,6 @@ object TextAlgos {
     sym.toDouble / s.length.toDouble
   }
 
-  /** Whitespace-delimited token count (A15 analog, utils.py:663-664). */
-  def tokenCount(s: String): Int = {
-    if (s == null) return 0
-    var i = 0
-    var n = 0
-    var inTok = false
-    while (i < s.length) {
-      val ws = Character.isWhitespace(s.charAt(i))
-      if (!ws && !inTok) { n += 1; inTok = true }
-      else if (ws) inTok = false
-      i += 1
-    }
-    n
-  }
-
   /** Jaro similarity of two strings (0..1). Standard definition as in
     * pg_similarity's jarowinkler (reference
     * init-scripts/init-user-db.sh:7, used functions.sql:1704-1708) and

@@ -59,8 +59,6 @@ final class NGramLM private (
     gramKeys.iterator.filter(_ != 0L).map(_ - 1)
   private[lm] def ctxKeySet: Iterator[Long] =
     ctxKeys.iterator.filter(_ != 0L).map(_ - 1)
-  private[lm] def unseenNum: Double = logNumUnseen
-  private[lm] def unseenDen: Double = logDenUnseen
 
   /** Sum of log P(c | prev2) over the normalized text; 0 chars → 0.0. */
   def logProb(text: String): (Double, Int) = {
@@ -80,11 +78,6 @@ final class NGramLM private (
       i += 1
     }
     (lp, text.length)
-  }
-
-  def avgLogProb(text: String): Double = {
-    val (lp, n) = logProb(text)
-    if (n == 0) 0.0 else lp / n
   }
 
   /** Char-level perplexity: exp(-avg log-prob). Empty text → 1.0. */

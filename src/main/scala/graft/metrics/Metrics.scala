@@ -1,6 +1,7 @@
 package graft.metrics
 
 import org.apache.spark.sql.{DataFrame, Observation}
+import org.apache.spark.sql.catalyst.plans.logical.CollectMetrics
 import org.apache.spark.sql.functions._
 
 import graft.rules.RuleConfig
@@ -64,7 +65,8 @@ object Metrics {
     *
     * `sources` are observation prefixes ("dd2", "dd3", "cd2", "ann2",
     * "ann3") — each must correspond to a `<src>_buckets` observe node
-    * in df's plan (fails fast otherwise).
+    * in df's plan (fails fast otherwise). One that AQE pruned reports
+    * nothing and reads as zero: its input was empty, so nothing was capped.
     */
   def truncationMetrics(df: DataFrame, sources: Seq[String]): DataFrame = {
     val spark = df.sparkSession
@@ -74,9 +76,15 @@ object Metrics {
     // accumulators this queryExecution never sees
     df.queryExecution.toRdd.foreach(_ => ())
     val om = df.queryExecution.observedMetrics
+    def inPlan(name: String) = df.queryExecution.analyzed
+      .collectFirst { case c: CollectMetrics if c.name == name => c }.nonEmpty
+    val zeros = new org.apache.spark.sql.catalyst.expressions.GenericRowWithSchema(
+      Array(0L, 0L), org.apache.spark.sql.types.StructType.fromDDL(
+        "capped_buckets BIGINT, dropped_ids BIGINT"))
     val rows = sources.map { src =>
       val row = om.getOrElse(s"${src}_buckets",
-        throw new IllegalArgumentException(
+        if (inPlan(s"${src}_buckets")) zeros
+        else throw new IllegalArgumentException(
           s"no '${src}_buckets' observation in plan (have: ${om.keys.mkString(",")})"))
       def metric(field: String): Long = {
         val names = row.schema.fieldNames

@@ -13,12 +13,6 @@ object Corrections {
   def nullOut(c: Column, flagged: Column): Column =
     when(flagged, lit(null)).otherwise(c)
 
-  /** C2/C13: replace flagged values by the column mean (computed over
-    * the current column state via a 1-row agg crossJoin upstream).
-    */
-  def replaceWithScalar(c: Column, flagged: Column, scalar: Column): Column =
-    when(flagged, scalar).otherwise(c)
-
   /** C3: trim + collapse internal whitespace. */
   def fixSpaces(c: Column): Column = trim(regexp_replace(c, "\\s+", " "))
 

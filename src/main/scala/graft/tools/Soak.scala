@@ -25,11 +25,13 @@ import graft.pipeline.CheckpointedRun
   */
 object Soak {
 
-  private def session(name: String): SparkSession = {
+  /** `SOAK_MASTER` overrides `defaultMaster`. */
+  private def session(name: String, defaultMaster: String = "local[8]",
+                      shufflePartitions: Int = 32): SparkSession = {
     val s = SparkSession.builder()
-      .master(sys.env.getOrElse("SOAK_MASTER", "local[8]"))
+      .master(sys.env.getOrElse("SOAK_MASTER", defaultMaster))
       .appName(name)
-      .config("spark.sql.shuffle.partitions", "32")
+      .config("spark.sql.shuffle.partitions", shufflePartitions.toString)
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
       .getOrCreate()
@@ -182,14 +184,7 @@ object Soak {
     val withIqr = optArg.exists(a => a == "iqr" || a == "all")
     val withDc = optArg.exists(a => a == "dc" || a == "all")
 
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SOAK_MASTER", "local[32]"))
-      .appName("graft-soak")
-      .config("spark.sql.shuffle.partitions", "128")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = session("graft-soak", "local[32]", 128)
     import spark.implicits._
 
     val corpus = java.nio.file.Files.createTempDirectory("graft_soak").toString

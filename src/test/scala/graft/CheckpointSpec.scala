@@ -376,6 +376,77 @@ class CheckpointSpec extends AnyFunSuite {
     }
   }
 
+  private def canon(df: org.apache.spark.sql.DataFrame): Seq[LabeledTurn] = {
+    val spark = TestSpark.spark
+    import spark.implicits._
+    df.as[LabeledTurn].collect().sortBy(t => (t.conv_id, t.turn_idx))
+      .map(t => t.copy(drop_reasons = t.drop_reasons.toList)).toSeq
+  }
+
+  test("census overflow: every bucket takes the join split, == direct with IQR off and on") {
+    val spark = TestSpark.spark
+    import spark.implicits._
+    val ds = spark.createDataset(TranscriptGen.generateLocal(60, seed = 23, skewCap = 200))
+    // at least one conversation above skewMaxTurns, so a census bounded
+    // at zero collected giants overflows and routes through the joins
+    assert(ds.groupBy($"conv_id").count().where($"count" > 5).count() > 0)
+    val bounds = QualityFilter.pplIqrBounds(QualityFilter.score(ds), 1.5)
+    for (k <- Seq(None, Some(1.5))) {
+      val direct = canon(QualityFilter.label(ds, skewMaxTurns = 0, k.map(_ => bounds)))
+      val root = Files.createTempDirectory("graft_overflow").toString
+      CheckpointedRun.run(ds, root, 4, skewMaxTurns = 5, maxCollectedGiants = 0,
+        pplIqrK = k)
+      assert(canon(CheckpointedRun.readOutput(spark, root, 4)) == direct, s"pplIqrK=$k")
+    }
+  }
+
+  test("labeling.cfg text is stable: no opt-in and all four opt-ins") {
+    val spark = TestSpark.spark
+    import spark.implicits._
+    // tables written by earlier versions must stay resumable, so the
+    // recorded text is pinned line for line
+    val ds = spark.createDataset(TranscriptGen.generateLocal(20, seed = 25, skewCap = 100))
+    def cfgText(root: String) = new String(java.nio.file.Files.readAllBytes(
+      java.nio.file.Paths.get(root, "_graft", "labeling.cfg")), "UTF-8")
+
+    val root0 = Files.createTempDirectory("graft_cfg0").toString
+    CheckpointedRun.run(ds, root0, 2)
+    assert(cfgText(root0) == "conv_neardup=off")
+
+    val benchDir = Files.createTempDirectory("graft_cfg_bench").toString
+    Seq("an eval prompt that is long enough to carry eight word grams")
+      .toDF("text").write.mode("overwrite").parquet(benchDir)
+    val (lo, hi) = QualityFilter.pplIqrBounds(QualityFilter.score(ds), 2.0)
+    val (nGrams, xorSig) = graft.ops.Decontaminate.benchFingerprint(
+      spark.read.parquet(benchDir), "text", 8)
+    val root4 = Files.createTempDirectory("graft_cfg4").toString
+    CheckpointedRun.run(ds, root4, 2,
+      convNearDup = Some(QualityFilter.ConvNearDupConfig()),
+      boilerplate = Some(QualityFilter.BoilerplateConfig(minConvs = 3, minLen = 20)),
+      pplIqrK = Some(2.0),
+      decontaminate = Some(QualityFilter.ContaminationConfig(benchPath = benchDir)))
+    assert(cfgText(root4) == Seq(
+      "conv_neardup=64,16,3,0.7,256",
+      "boilerplate=3,20",
+      s"ppl_iqr=2.0,$lo,$hi",
+      s"decontaminate=8,1,text,$nGrams:${java.lang.Long.toHexString(xorSig)},$benchDir"
+    ).mkString("\n"))
+  }
+
+  test("conv near-dup with a metrics root records zero truncation when no LSH pair exists") {
+    val spark = TestSpark.spark
+    // no two conversations share an LSH band here, so the observed
+    // bucket subtree is empty and adaptive execution prunes it
+    val input = TranscriptGen.generate(spark, 200, seed = 1L, skewCap = 200)
+    val root = Files.createTempDirectory("graft_cd2_empty").toString
+    val mroot = Files.createTempDirectory("graft_cd2_empty_m").toString
+    CheckpointedRun.run(input, root, 2, metricsRoot = Some(mroot),
+      convNearDup = Some(QualityFilter.ConvNearDupConfig()))
+    val trunc = graft.io.SnapshotTable(s"$mroot/truncation", 1).read(spark)
+      .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2))).toSeq
+    assert(trunc == Seq(("cd2", 0L, 0L)))
+  }
+
   test("file-level stats prune a ts-range read to only the overlapping files") {
     val spark = TestSpark.spark
     import spark.implicits._

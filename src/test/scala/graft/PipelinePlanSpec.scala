@@ -128,6 +128,27 @@ class PipelinePlanSpec extends AnyFunSuite {
       s"text rides a shuffle:\n${offenders.mkString("\n")}")
   }
 
+  test("bucket filter pushes below the scoring projection") {
+    // a bucketed runner labels each bucket from one scored frame; that
+    // costs no extra scoring only because the conv_id bucket filter
+    // lands under the ScoreAllExpr projection
+    import org.apache.spark.sql.catalyst.expressions.XxHash64
+    import org.apache.spark.sql.catalyst.plans.logical.{Filter, Project}
+    val df = QualityFilter.score(TranscriptGen.generate(spark, 50, 1L, 100))
+      .where(graft.metrics.Metrics.bucketCol(4) === 1)
+    val opt = df.queryExecution.optimizedPlan
+    val scoring = opt.collect {
+      case p: Project if p.projectList.exists(
+        _.exists(_.isInstanceOf[graft.functions.ScoreAllExpr])) => p
+    }
+    assert(scoring.size == 1, opt.treeString)
+    val bucketFilters = opt.collect {
+      case f: Filter if f.condition.exists(_.isInstanceOf[XxHash64]) => f
+    }
+    assert(bucketFilters.nonEmpty &&
+      bucketFilters.forall(f => scoring.head.child.exists(_ eq f)), opt.treeString)
+  }
+
   test("skew split routes giants via InSet filters, not anti/semi joins") {
     val ds = TranscriptGen.generate(spark, 60, 1L, 500)
     val df = graft.pipeline.SkewSplit.label(ds, maxTurns = 64)
